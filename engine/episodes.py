@@ -18,9 +18,9 @@ Spark shape:
                       neighborhood always covers `radius` even at the MINIMUM
                       quadratic-ST cell edge — property-tested near face
                       corners in tests/test_geo.py.
-  build_episodes    — per-host Arrow kernel: W3 run-compress, W4 spans, W5
-                      short-dwell demotion to fixpoint, 'unknown' gap
-                      episodes; fully deterministic ordering.
+  build_episodes    — per-(host, subset) Arrow kernel: W3 run-compress,
+                      W4 spans, W5 short-dwell demotion to fixpoint, then
+                      'unknown' gap episodes; fully deterministic ordering.
 """
 
 from __future__ import annotations
@@ -32,8 +32,9 @@ from pyspark.sql import functions as F
 
 from . import geo
 from .config import DEFAULT, EngineConfig
-from .functions import (epoch_s, haversine_m_col, make_cell_encode_udf,
+from .functions import (haversine_m_col, make_cell_encode_udf,
                         make_cell_neighbors_udf, parent_cell_col)
+from .keyruns import key_run_stream
 
 EPISODE_SCHEMA = ("host string, seq int, start_ts timestamp, end_ts timestamp, "
                   "kind string, location_id int")
@@ -285,98 +286,36 @@ _PER_SUBSET_SCHEMA = ("host string, start_ts timestamp, end_ts timestamp, "
                       "kind string, location_id int, ridx int")
 
 
-def _episode_stream(cfg: EngineConfig):
-    """mapInArrow stream over a (host, subset_id, seq)-sorted partition:
-    each contiguous (host, subset) run goes through _subset_runs; one output
-    batch per input Arrow batch.  `ridx` is the within-subset emission
+def _episode_kernel(cfg: EngineConfig):
+    """Per-(host, subset) kernel: the subset's points, stable-sorted by
+    seq, through _subset_runs.  `ridx` is the within-subset emission
     index — build_episodes uses it as the deterministic tiebreak for
     zero-length runs at equal timestamps.  Arrow-native I/O: only the
-    numeric columns become numpy; the host string is read ONCE per
-    (host, subset) group, never per point."""
+    numeric columns become numpy; the host string is read once per
+    subset, never per point."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     min_dwell_us = int(cfg.min_dwell_s * 1e6)
 
-    def flush(host: str, t_parts, loc_parts, seq_parts, acc):
-        seq = np.concatenate(seq_parts) if len(seq_parts) > 1 else seq_parts[0]
-        t = np.concatenate(t_parts) if len(t_parts) > 1 else t_parts[0]
-        loc = np.concatenate(loc_parts) if len(loc_parts) > 1 else loc_parts[0]
-        order = np.argsort(seq, kind="stable")
-        starts, ends, labels = _subset_runs(t[order], loc[order], min_dwell_us)
-        acc["host"].extend([host] * len(starts))
-        acc["start"].extend(starts)
-        acc["end"].extend(ends)
-        acc["lab"].extend(labels)
-
-    def emit(acc):
-        labs = acc["lab"]
-        ridx = np.empty(len(labs), dtype=np.int32)
-        # ridx restarts at each flush boundary recorded in acc["cuts"]
-        prev = 0
-        for c in acc["cuts"]:
-            ridx[prev:c] = np.arange(c - prev, dtype=np.int32)
-            prev = c
+    def kernel(run):
+        order = np.argsort(run["seq"].to_numpy(), kind="stable")
+        t = run["warc_ts"].to_numpy().astype(np.int64)[order]
+        loc = run["location_id"].cast(pa.float64()).to_numpy()[order]
+        starts, ends, labels = _subset_runs(t, loc, min_dwell_us)
+        k = len(starts)
         return pa.record_batch([
-            pa.array(acc["host"], type=pa.string()),
-            pa.array(np.asarray(acc["start"], dtype="datetime64[us]")),
-            pa.array(np.asarray(acc["end"], dtype="datetime64[us]")),
-            pa.array(["travel" if np.isnan(l) else "activity" for l in labs],
-                     type=pa.string()),
-            pa.array([None if np.isnan(l) else int(l) for l in labs],
+            pa.repeat(run["host"][0], k),
+            pa.array(np.asarray(starts, dtype="datetime64[us]")),
+            pa.array(np.asarray(ends, dtype="datetime64[us]")),
+            pa.array(["travel" if np.isnan(l) else "activity"
+                      for l in labels], type=pa.string()),
+            pa.array([None if np.isnan(l) else int(l) for l in labels],
                      type=pa.int32()),
-            pa.array(ridx),
+            pa.array(np.arange(k, dtype=np.int32)),
         ], names=["host", "start_ts", "end_ts", "kind", "location_id",
                   "ridx"])
 
-    def stream(batches):
-        t_parts: list = []
-        loc_parts: list = []
-        seq_parts: list = []
-        cur = None  # (host, subset_id)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            h = tbl["host"].combine_chunks()
-            subs = tbl["subset_id"].to_numpy(zero_copy_only=False)
-            n = len(h)
-            if n > 1:
-                hneq = pc.not_equal(h.slice(1), h.slice(0, n - 1)) \
-                    .to_numpy(zero_copy_only=False)
-                change = hneq | (subs[1:] != subs[:-1])
-                cut = np.flatnonzero(change) + 1
-            else:
-                cut = np.empty(0, dtype=np.int64)
-            gstarts = np.r_[0, cut]
-            gends = np.r_[cut, n]
-            t_all = (tbl["warc_ts"].to_numpy(zero_copy_only=False)
-                     .astype(np.int64))
-            loc_all = (tbl["location_id"].cast(pa.float64())
-                       .to_numpy(zero_copy_only=False))
-            seq_all = tbl["seq"].to_numpy(zero_copy_only=False)
-            acc = {"host": [], "start": [], "end": [], "lab": [], "cuts": []}
-            for s, e in zip(gstarts, gends):
-                key = (h[int(s)].as_py(), int(subs[s]))
-                if cur is None or key == cur:
-                    pass
-                else:
-                    flush(cur[0], t_parts, loc_parts, seq_parts, acc)
-                    acc["cuts"].append(len(acc["lab"]))
-                    t_parts, loc_parts, seq_parts = [], [], []
-                cur = key
-                t_parts.append(t_all[s:e])
-                loc_parts.append(loc_all[s:e])
-                seq_parts.append(seq_all[s:e])
-            if acc["lab"]:
-                yield emit(acc)
-        if t_parts:
-            acc = {"host": [], "start": [], "end": [], "lab": [], "cuts": []}
-            flush(cur[0], t_parts, loc_parts, seq_parts, acc)
-            acc["cuts"].append(len(acc["lab"]))
-            yield emit(acc)
-
-    return stream
+    return kernel
 
 
 def build_episodes(assigned: DataFrame, cfg: EngineConfig = DEFAULT,
@@ -415,7 +354,9 @@ def build_episodes(assigned: DataFrame, cfg: EngineConfig = DEFAULT,
     if not presorted:
         pts = (pts.repartition(F.col("host"), F.col("subset_id"))
                .sortWithinPartitions("host", "subset_id", "seq"))
-    per = pts.mapInArrow(_episode_stream(cfg), schema=_PER_SUBSET_SCHEMA)
+    per = pts.mapInArrow(key_run_stream(["host", "subset_id"],
+                                        _episode_kernel(cfg)),
+                         schema=_PER_SUBSET_SCHEMA)
     # ONE window pass (single exchange + single sort): lag for gap
     # detection, row_number, and a running gap count share the same
     # (host / start_ts, end_ts, ridx) window spec, so Spark evaluates all
@@ -457,15 +398,6 @@ def build_episodes(assigned: DataFrame, cfg: EngineConfig = DEFAULT,
 # ---------------------------------------------------------------------------
 # aggregates over locations/episodes (A6-A8)
 # ---------------------------------------------------------------------------
-
-def dwell_totals(episodes: DataFrame) -> DataFrame:
-    """A6 — observed seconds per host x kind (+ per location)."""
-    return (episodes
-            .groupBy("host", "kind", "location_id")
-            .agg(F.round(F.sum(epoch_s(F.col("end_ts"))
-                               - epoch_s(F.col("start_ts"))), 6).alias("total_s"),
-                 F.count(F.lit(1)).alias("n_episodes")))
-
 
 def agreement_metrics(algo: DataFrame, truth: DataFrame) -> DataFrame:
     """A8 — % of overlapped time where episode kind+location agree

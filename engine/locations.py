@@ -6,10 +6,14 @@ over a user's (here: host's) trajectory, thresholded in dwell-seconds,
 peaks agglomerated into activity locations.
 
 Spark shape (detect_locations): chunk-parallel — a mapInArrow binning
-kernel over arbitrary partitions (O(sites), embarrassingly parallel),
-a native groupBy(host, cell).sum merge, then ONE per-host kernel on the
-merged occupied-cell grid (O(cells)).  The single-kernel-per-host variant
-is kept as detect_locations_wholehost (parity oracle).  Inside the kernels
+kernel over arbitrary partitions (O(sites), embarrassingly parallel)
+emits per-(host, cell) partial masses; a per-host bucket-prune kernel
+and a semi-join drop cells that cannot reach the threshold; ONE per-host
+kernel then merges the surviving partials and runs on the occupied-cell
+grid (O(cells)).  The single-kernel-per-host variant is kept as
+detect_locations_wholehost (parity oracle).  Every per-host kernel is an
+Arrow kernel over a host-sorted stream (repartition + partition sort +
+keyruns.key_run_stream) — no per-group pandas frame.  Inside the kernels
 everything is vectorized numpy on a SPARSE grid:
 
   1. X3   — segment interpolation (identical math to
@@ -33,12 +37,12 @@ Memory bound: cfg.max_points_per_kernel caps a single host's kernel input
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import geo
 from .config import DEFAULT, EngineConfig
+from .keyruns import key_run_stream
 
 LOCATION_SCHEMA = ("host string, location_id int, lat double, lon double, "
                    "dwell_s double, n_cells int")
@@ -479,56 +483,16 @@ def _kde_from_grid_quant(uix, uiy, m0, lat0, lon0, cfg: EngineConfig):
             np.array([out_n[i] for i in order], dtype=np.int64))
 
 
-def _location_kernel(cfg: EngineConfig, quant: bool = False):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # The KDE is order-independent (segments ride on each row as
-        # next_* links); only the projection anchor needs the host's FIRST
-        # point, located by integer argmin(seq) — no string sort of the
-        # whole group (the mega-host's pandas mergesort on (warc_ts, url)
-        # was pure straggler overhead).
-        lat = pdf["lat"].to_numpy(np.float64)
-        lon = pdf["lon"].to_numpy(np.float64)
-        anchor = None
-        if len(pdf):
-            a = int(np.argmin(pdf["seq"].to_numpy(np.int64)))
-            anchor = (float(lat[a]), float(lon[a]))
-        la, lo, dw, nc = kde_locations_numpy(
-            lat, lon,
-            pdf["next_lat"].to_numpy(np.float64),
-            pdf["next_lon"].to_numpy(np.float64),
-            pdf["next_dt_s"].to_numpy(np.float64), cfg, anchor=anchor,
-            quant=quant)
-        return pd.DataFrame({
-            "host": pdf["host"].iloc[0] if len(pdf) else "",
-            "location_id": np.arange(len(la), dtype=np.int32),
-            "lat": la, "lon": lo, "dwell_s": dw,
-            "n_cells": nc.astype(np.int32),
-        })
-
-    return kernel
-
-
-def _wholehost_stream(cfg: EngineConfig, quant: bool = False):
-    """mapInArrow stream over a (host)-sorted partition: buffers exactly
-    one host's rows at a time (hosts are contiguous runs — the
-    _prep_stream pattern) and runs kde_locations_numpy per completed
-    host straight off the Arrow buffers.  Value-identical to the
-    per-group pandas kernel (_location_kernel, kept as the semantic
-    reference): the KDE is order-independent (integer-us site masses;
-    cells canonically re-sorted in _kde_from_grid) and the anchor is
-    located by argmin(seq), so only the per-group pandas frame
-    construction — measured ~40% of the stage at 1500 tiny hosts —
-    goes away."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    num_cols = ("seq", "lat", "lon", "next_lat", "next_lon", "next_dt_s")
-    out_names = ["host", "location_id", "lat", "lon", "dwell_s", "n_cells"]
-
-    def run_host(host: str, parts: list[dict]):
-        arrs = {c: (np.concatenate([p[c] for p in parts])
-                    if len(parts) > 1 else parts[0][c])
-                for c in num_cols}
+def _wholehost_kernel(cfg: EngineConfig, quant: bool = False):
+    """Per-host kernel for detect_locations_wholehost: kde_locations_numpy
+    straight off one host's Arrow run.  The KDE is order-independent
+    (integer-us site masses; cells canonically re-sorted in
+    _kde_from_grid) and the projection anchor is the host's first point,
+    located by integer argmin(seq), so the run needs no sort."""
+    def kernel(run):
+        arrs = {c: run[c].to_numpy()
+                for c in ("seq", "lat", "lon", "next_lat", "next_lon",
+                          "next_dt_s")}
         lat = arrs["lat"]
         lon = arrs["lon"]
         a = int(np.argmin(arrs["seq"]))
@@ -536,52 +500,22 @@ def _wholehost_stream(cfg: EngineConfig, quant: bool = False):
             lat, lon, arrs["next_lat"], arrs["next_lon"],
             arrs["next_dt_s"], cfg,
             anchor=(float(lat[a]), float(lon[a])), quant=quant)
-        if len(la) == 0:
-            return None
-        return pa.record_batch([
-            pa.array([host] * len(la), type=pa.string()),
-            pa.array(np.arange(len(la), dtype=np.int32)),
-            pa.array(la), pa.array(lo), pa.array(dw),
-            pa.array(nc.astype(np.int32)),
-        ], names=out_names)
+        return _locations_batch(run, la, lo, dw, nc)
 
-    def stream(batches):
-        buf: list[dict] = []
-        cur: str | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            h = tbl["host"].combine_chunks()
-            n = len(h)
-            if n > 1:
-                neq = pc.not_equal(h.slice(1), h.slice(0, n - 1))
-                cut = np.flatnonzero(
-                    neq.to_numpy(zero_copy_only=False)) + 1
-            else:
-                cut = np.empty(0, dtype=np.int64)
-            cols = {c: tbl[c].to_numpy(zero_copy_only=False)
-                    for c in num_cols}
-            starts = np.r_[0, cut]
-            ends = np.r_[cut, n]
-            for s, e in zip(starts, ends):
-                run_h = h[int(s)].as_py()
-                g = {c: v[s:e] for c, v in cols.items()}
-                if cur is None or run_h == cur:
-                    buf.append(g)
-                    cur = run_h
-                else:
-                    out = run_host(cur, buf)
-                    if out is not None:
-                        yield out
-                    buf = [g]
-                    cur = run_h
-        if buf:
-            out = run_host(cur, buf)
-            if out is not None:
-                yield out
+    return kernel
 
-    return stream
+
+def _locations_batch(run, la, lo, dw, nc):
+    """LOCATION_SCHEMA rows for one host run (None when it has none)."""
+    import pyarrow as pa
+    if len(la) == 0:
+        return None
+    return pa.record_batch([
+        pa.repeat(run["host"][0], len(la)),
+        pa.array(np.arange(len(la), dtype=np.int32)),
+        pa.array(la), pa.array(lo), pa.array(dw),
+        pa.array(nc.astype(np.int32)),
+    ], names=["host", "location_id", "lat", "lon", "dwell_s", "n_cells"])
 
 
 def detect_locations_wholehost(points: DataFrame,
@@ -596,16 +530,15 @@ def detect_locations_wholehost(points: DataFrame,
     parity oracle for detect_locations' chunk-parallel path.
 
     Plumbing: one hash exchange on host + a native partition sort, then
-    the streaming Arrow kernel (_wholehost_stream) — the same exchange
-    count as the old groupBy().applyInPandas form without its per-group
-    pandas frame construction (value-identical; parity-tested)."""
+    one Arrow kernel per host run (keyruns.key_run_stream)."""
     cols = ["host", "seq", "lat", "lon",
             "next_lat", "next_lon", "next_dt_s"]
     pts = (points.select(*cols)
            .repartition(F.col("host"))
            .sortWithinPartitions("host"))
-    return pts.mapInArrow(_wholehost_stream(cfg, quant=quant),
-                          schema=LOCATION_SCHEMA)
+    return pts.mapInArrow(
+        key_run_stream(["host"], _wholehost_kernel(cfg, quant=quant)),
+        schema=LOCATION_SCHEMA)
 
 
 _PARTIAL_SCHEMA = ("host string, ix long, iy long, mass double, "
@@ -622,18 +555,15 @@ def _prune_kernel(cfg: EngineConfig, quant: bool = False):
     1-bucket dilation.  Emits the dilated candidate bucket keys — the old
     explode9 -> agg -> filter -> explode9 -> distinct chain spent ~3 extra
     shuffles of 9x-exploded rows to compute exactly this set."""
+    import pyarrow as pa
+
     thr = cfg.kde_time_threshold_s * (QUANT_MASS_SCALE if quant
                                       else FLOAT_MASS_SCALE)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"host": pd.Series([], dtype=object),
-                              "bx": pd.Series([], dtype=np.int64),
-                              "by": pd.Series([], dtype=np.int64)})
-        if len(pdf) == 0:
-            return empty
-        bx = pdf["bx"].to_numpy(np.int64)
-        by = pdf["by"].to_numpy(np.int64)
-        bm = pdf["bm"].to_numpy(np.float64)
+    def kernel(run):
+        bx = run["bx"].to_numpy()
+        by = run["by"].to_numpy()
+        bm = run["bm"].to_numpy()
         key = (bx << np.int64(32)) ^ (by & np.int64(0xFFFFFFFF))
         order = np.argsort(key, kind="stable")  # keys unique (post-groupBy)
         ucb, cmass = key[order], bm[order]
@@ -650,7 +580,7 @@ def _prune_kernel(cfg: EngineConfig, quant: bool = False):
                 np.add.at(nbh, pos[hit], cmass[np.where(hit)[0]])
         cand = ucb[nbh >= thr]
         if len(cand) == 0:
-            return empty
+            return None
         cdx = cand >> np.int64(32)
         cdy = ((cand & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
         dil = np.unique(np.concatenate(
@@ -658,8 +588,9 @@ def _prune_kernel(cfg: EngineConfig, quant: bool = False):
              for a in (-1, 0, 1) for b in (-1, 0, 1)]))
         dbx = dil >> np.int64(32)
         dby = ((dil & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-        return pd.DataFrame({"host": pdf["host"].iloc[0],
-                             "bx": dbx, "by": dby})
+        return pa.record_batch(
+            [pa.repeat(run["host"][0], len(dil)), pa.array(dbx),
+             pa.array(dby)], names=["host", "bx", "by"])
 
     return kernel
 
@@ -773,13 +704,10 @@ def _grid_kernel(cfg: EngineConfig, quant: bool = False):
     independent of point count.  Rows are lexsorted first so every float
     accumulation runs in a deterministic order regardless of shuffle
     arrival order."""
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"host": [], "location_id": [], "lat": [],
-                                 "lon": [], "dwell_s": [], "n_cells": []})
-        ix = pdf["ix"].to_numpy(np.int64)
-        iy = pdf["iy"].to_numpy(np.int64)
-        m = pdf["mass"].to_numpy(np.float64)
+    def kernel(run):
+        ix = run["ix"].to_numpy()
+        iy = run["iy"].to_numpy()
+        m = run["mass"].to_numpy()
         order = np.lexsort((m, iy, ix))
         ix, iy, m = ix[order], iy[order], m[order]
         key = (ix << np.int64(23)) | (iy + np.int64(1 << 22))
@@ -787,21 +715,14 @@ def _grid_kernel(cfg: EngineConfig, quant: bool = False):
         m0 = np.bincount(inv, weights=m)
         uix = uk >> np.int64(23)
         uiy = (uk & np.int64((1 << 23) - 1)) - np.int64(1 << 22)
+        alat, alon = run["alat"][0].as_py(), run["alon"][0].as_py()
         if quant:
-            la, lo, dw, nc = _kde_from_grid_quant(
-                uix, uiy, m0,
-                float(pdf["alat"].iloc[0]), float(pdf["alon"].iloc[0]), cfg)
+            la, lo, dw, nc = _kde_from_grid_quant(uix, uiy, m0, alat, alon,
+                                                  cfg)
         else:
-            la, lo, dw, nc = _kde_from_grid(
-                uix, uiy, m0,
-                float(pdf["alat"].iloc[0]), float(pdf["alon"].iloc[0]), cfg,
-                scale=FLOAT_MASS_SCALE)
-        return pd.DataFrame({
-            "host": pdf["host"].iloc[0],
-            "location_id": np.arange(len(la), dtype=np.int32),
-            "lat": la, "lon": lo, "dwell_s": dw,
-            "n_cells": nc.astype(np.int32),
-        })
+            la, lo, dw, nc = _kde_from_grid(uix, uiy, m0, alat, alon, cfg,
+                                            scale=FLOAT_MASS_SCALE)
+        return _locations_batch(run, la, lo, dw, nc)
 
     return kernel
 
@@ -833,12 +754,17 @@ def detect_locations(points: DataFrame, cfg: EngineConfig = DEFAULT,
          mega-host spreads across all cores instead of serializing;
       3. a distributed twin of the kernel's threshold-aware bucket prune
          drops ~95% of corridor cells before any wide shuffle (see inline
-         comment — provably exact);
+         comment — provably exact): `_prune_kernel` per host over the
+         tiny coarse-bucket table, then a semi-join;
       4. `_grid_kernel` per host merges the surviving partials (sorted
          unique+bincount) and runs smoothing/threshold/clustering on the
          OCCUPIED-CELL grid — orders of magnitude smaller than the point
          stream (the corridor-heavy mega-host at 8M docs is ~1M cells vs
          ~100M sites).
+
+    Both per-host kernels run as repartition(host) + partition sort +
+    mapInArrow over host runs (keyruns.key_run_stream): one exchange each,
+    as a grouped pandas apply would take, but no per-group pandas frame.
 
     Float note: site mass is snapped to integer MICROSECONDS at the site
     level in BOTH kernels (FLOAT_MASS_SCALE), so every cell-mass
@@ -893,10 +819,13 @@ def detect_locations(points: DataFrame, cfg: EngineConfig = DEFAULT,
     # neighborhood + threshold + dilation in ONE per-host kernel over the
     # tiny bucket table (see _prune_kernel); the dilated-candidate output
     # is tiny, so AQE turns the semi-join into a runtime broadcast
-    dil = bucket.groupBy("host").applyInPandas(
-        _prune_kernel(cfg, quant=quant), schema=_BUCKET_KEEP_SCHEMA)
+    dil = (bucket.repartition(F.col("host")).sortWithinPartitions("host")
+           .mapInArrow(key_run_stream(["host"],
+                                      _prune_kernel(cfg, quant=quant)),
+                       schema=_BUCKET_KEEP_SCHEMA))
     kept = (part_b.join(dil, ["host", "bx", "by"], "left_semi")
             .drop("bx", "by"))
-    return (kept.groupBy("host")
-            .applyInPandas(_grid_kernel(cfg, quant=quant),
-                           schema=LOCATION_SCHEMA))
+    return (kept.repartition(F.col("host")).sortWithinPartitions("host")
+            .mapInArrow(key_run_stream(["host"],
+                                       _grid_kernel(cfg, quant=quant)),
+                        schema=LOCATION_SCHEMA))

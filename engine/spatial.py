@@ -13,8 +13,11 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .keyruns import key_run_stream
 
 # |coordinate| bound so every cross/dot product of coordinate differences
 # stays a provable int64: |dx|, |dy| <= 2^31, products <= 2^62, and the
@@ -82,7 +85,8 @@ def convex_hull_2d(df: DataFrame, keys: Sequence[str], x: str,
     stage 1 is a map-side mapInPandas pre-reduce (dedup + local hull
     per key per Arrow batch, NO shuffle) whose output per batch is
     bounded by hull sizes, and only those survivors ride the single
-    (keys)-hash exchange into the per-key final chain.  The point set
+    (keys)-hash exchange into the per-key final chain (an Arrow kernel
+    per key run of the key-sorted partition).  The point set
     itself never shuffles.  Worst case (all points on a circle) the
     pre-reduce passes everything through — same bound as the exact
     problem demands; for that regime cap upstream or coarsen the grid.
@@ -127,8 +131,9 @@ def convex_hull_2d(df: DataFrame, keys: Sequence[str], x: str,
     out_schema = (f"{key_schema}, idx long, x long, y long, "
                   f"n_hull long, hull_2area long")
 
-    def final_hull(g: pd.DataFrame) -> pd.DataFrame:
-        pts = np.unique(g[["_x", "_y"]].to_numpy(dtype=np.int64), axis=0)
+    def final_hull(run: pa.Table) -> pa.RecordBatch:
+        pts = np.unique(np.column_stack([run["_x"].to_numpy(),
+                                         run["_y"].to_numpy()]), axis=0)
         hull = _hull_ccw(pts)
         h = len(hull)
         a2 = 0
@@ -138,17 +143,17 @@ def convex_hull_2d(df: DataFrame, keys: Sequence[str], x: str,
             a2 += x0 * y1 - x1 * y0
         if not -(1 << 63) < a2 < (1 << 63):
             raise ValueError("convex_hull_2d: doubled area overflows int64")
-        res = pd.DataFrame({
-            "idx": np.arange(h, dtype=np.int64),
-            "x": np.fromiter((v[0] for v in hull), np.int64, h),
-            "y": np.fromiter((v[1] for v in hull), np.int64, h),
-            "n_hull": np.full(h, h, dtype=np.int64),
-            "hull_2area": np.full(h, a2, dtype=np.int64)})
-        for k in keys:
-            res.insert(0, k, pd.Series([g[k].iloc[0]] * h))
-        return res[keys + ["idx", "x", "y", "n_hull", "hull_2area"]]
+        return pa.record_batch(
+            [pa.repeat(run[k][0], h) for k in keys]
+            + [pa.array(np.arange(h, dtype=np.int64)),
+               pa.array(np.fromiter((v[0] for v in hull), np.int64, h)),
+               pa.array(np.fromiter((v[1] for v in hull), np.int64, h)),
+               pa.array(np.full(h, h, dtype=np.int64)),
+               pa.array(np.full(h, a2, dtype=np.int64))],
+            names=keys + ["idx", "x", "y", "n_hull", "hull_2area"])
 
-    return pre.groupBy(*keys).applyInPandas(final_hull, out_schema)
+    return (pre.repartition(*keys).sortWithinPartitions(*keys)
+            .mapInArrow(key_run_stream(keys, final_hull), out_schema))
 
 
 def hull_diameter(df: DataFrame, keys: Sequence[str], x: str,
@@ -355,14 +360,17 @@ def snap_to_segments(points: DataFrame, segments: DataFrame,
     hix = F.greatest(F.col("_x1"), F.col("_x2")) + F.lit(cs)
     loy = F.least(F.col("_y1"), F.col("_y2")) - F.lit(cs)
     hiy = F.greatest(F.col("_y1"), F.col("_y2")) + F.lit(cs)
-    ncell = ((cell(hix) - cell(lox) + 1)
-             * (cell(hiy) - cell(loy) + 1))
+    ext = F.greatest(F.abs(F.col("_x2") - F.col("_x1")),
+                     F.abs(F.col("_y2") - F.col("_y1")))
+    # the cell-count product is evaluated only inside the extent
+    # envelope: a longer segment (raised on below) can overflow it,
+    # which ANSI mode would raise as an ArithmeticException first
+    ncell = F.when(ext <= 4096, (cell(hix) - cell(lox) + 1)
+                   * (cell(hiy) - cell(loy) + 1))
     # extent + fan-out envelope checks fused into ONE segment-dim scan
     # (was two); raise order (extent first) preserved
-    chk = seg.agg(
-        F.max(F.greatest(F.abs(F.col("_x2") - F.col("_x1")),
-                         F.abs(F.col("_y2") - F.col("_y1")))).alias("ext"),
-        F.max(ncell).alias("fan")).collect()[0]
+    chk = seg.agg(F.max(ext).alias("ext"),
+                  F.max(ncell).alias("fan")).collect()[0]
     if chk["ext"] is not None and chk["ext"] > 4096:
         raise ValueError(
             f"snap_to_segments: a segment spans {chk['ext']} (> 4096) per "

@@ -103,34 +103,35 @@ def rollup_pyramid(density: DataFrame, cfg: EngineConfig = DEFAULT,
     Parent ids are pure bit math (parent_cell_col) — stays in codegen; each
     level is one partial-aggregated shuffle of the already-small raster.
 
-    ``hierarchical=True`` aggregates each coarser level from the FINEST
+    ``hierarchical=True`` aggregates each coarser level from the nearest
     already-computed finer level instead of from the base: total
     aggregation input drops from n_levels x base to ~1.33 x base (the
     classic pyramid build — the shape that matters when the base raster
-    is corpus-sized).  Only exact for integer-valued masses (sums of
-    sums regroup float rounding), which is why the default stays False:
-    the float-mass path's per-cell values remain bit-identical to the
-    flat form, and the integer-ms callers opt in.
+    is corpus-sized).  Levels are built finest first whatever order
+    ``levels`` lists them in; the output unions them in that order.
+    Only exact for integer-valued masses (sums of sums regroup float
+    rounding), which is why the default stays False: the float-mass
+    path's per-cell values remain bit-identical to the flat form, and
+    the integer-ms callers opt in.
     """
     lvls = levels if levels is not None else cfg.tile_levels
     base = base_level if base_level is not None else cfg.cell_level
-    out = None
-    done: list[tuple[int, DataFrame]] = []
-    for lvl in lvls:
+    built: dict[int, DataFrame] = {}
+    for lvl in sorted(set(lvls), reverse=True):
         if lvl == base:
             d = density.select(F.lit(lvl).alias("level"), "cell_id", "mass_s")
         else:
-            src, src_lvl = density, base
-            if hierarchical:
-                finer = [(sl, sd) for sl, sd in done if sl > lvl]
-                if finer:
-                    src_lvl, src = min(finer, key=lambda t: t[0] - lvl)
+            src = density
+            if hierarchical and built:   # every built level is finer
+                src = built[min(built)].select("cell_id", "mass_s")
             d = (src
                  .groupBy(parent_cell_col(F.col("cell_id"), lvl).alias("cell_id"))
                  .agg(F.sum("mass_s").alias("mass_s"))
                  .select(F.lit(lvl).alias("level"), "cell_id", "mass_s"))
-        done.append((lvl, d.select("cell_id", "mass_s")))
-        out = d if out is None else out.unionByName(d)
+        built[lvl] = d
+    out = None
+    for lvl in lvls:
+        out = built[lvl] if out is None else out.unionByName(built[lvl])
     return out
 
 
@@ -286,12 +287,6 @@ def pip_join(points: DataFrame, polygons_with_cover: DataFrame,
 # ---------------------------------------------------------------------------
 # skew: hot-cell detection + salted aggregation
 # ---------------------------------------------------------------------------
-
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Heavy-hitter keys by exact count (cheap: partial-agg count shuffle)."""
-    return (df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= threshold).select(key, "n"))
-
 
 def salted_cell_density(sites: DataFrame, cfg: EngineConfig = DEFAULT,
                         level: int | None = None) -> DataFrame:

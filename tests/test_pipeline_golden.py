@@ -221,3 +221,45 @@ def test_build_episodes_presorted_parity(spark, unit_pages_sdf):
             assert (pd.isna(la) == pd.isna(lb)).all(), c
             m = ~pd.isna(la)
             assert (la[m] == lb[m]).all(), c
+
+
+def test_outputs_independent_of_arrow_batch_size(spark, unit_pages_sdf):
+    """Per-host and per-subset runs that span Arrow batch seams: with
+    7-row Arrow batches every host's run crosses many seams, and trace
+    prep, both KDE strategies and episodes (both sort paths) must equal
+    their default-batch outputs exactly."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def run_all():
+        gp = trace_prep.geopoints(unit_pages_sdf, DEFAULT).cache()
+        locations = loc.detect_locations(gp, DEFAULT).cache()
+        assigned = ep.knn_assign_collected(gp, locations, DEFAULT)
+        outs = {
+            "geopoints": (gp.toPandas(), ["url"]),
+            "chunked": (locations.toPandas(), ["host", "location_id"]),
+            "wholehost": (loc.detect_locations_wholehost(gp, DEFAULT)
+                          .toPandas(), ["host", "location_id"]),
+            "episodes": (ep.build_episodes(assigned, DEFAULT).toPandas(),
+                         ["host", "seq"]),
+            "episodes_presorted": (
+                ep.build_episodes(assigned, DEFAULT, presorted=True)
+                .toPandas(), ["host", "seq"]),
+        }
+        locations.unpersist()
+        gp.unpersist()
+        return {k: df.sort_values(by).reset_index(drop=True)
+                for k, (df, by) in outs.items()}
+
+    default = run_all()
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        small = run_all()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    for k in default:
+        assert len(default[k]) > 0, k
+        assert default[k].equals(small[k]), k

@@ -40,6 +40,36 @@ def test_kring_smooth_conserves_mass(sites):
     assert abs(a - b) / a < 1e-9
 
 
+def test_rollup_pyramid_hierarchical_level_order(spark, sites):
+    """hierarchical=True builds finer levels first whatever order the
+    caller lists them in: on integer masses (exact under regrouping)
+    coarse-to-fine and fine-to-coarse levels give equal pyramids."""
+    dens = (tiles.cell_density(sites)
+            .withColumn("mass_s", F.round("mass_s").cast("long")).cache())
+
+    def pyramid(levels):
+        return (tiles.rollup_pyramid(dens, levels=levels, hierarchical=True)
+                .toPandas().sort_values(["level", "cell_id"])
+                .reset_index(drop=True))
+
+    fine_first = pyramid((16, 14, 12, 10))
+    coarse_first = pyramid((10, 12, 14, 16))
+    assert sorted(fine_first["level"].unique()) == [10, 12, 14, 16]
+    assert fine_first.equals(coarse_first)
+
+    # and both orders build the same chain: level 10 aggregates level 12
+    # (nested aggregates), not the base raster
+    def n_aggs(levels):
+        p = tiles.rollup_pyramid(dens, levels=levels, hierarchical=True)
+        return p._jdf.queryExecution().optimizedPlan().toString() \
+            .count("Aggregate")
+    assert n_aggs((10, 12)) == n_aggs((12, 10))
+    flat = (tiles.rollup_pyramid(dens, levels=(10, 12, 14, 16))
+            .toPandas().sort_values(["level", "cell_id"])
+            .reset_index(drop=True))
+    assert flat.equals(coarse_first)
+
+
 def test_rollup_pyramid_levels(sites):
     dens = tiles.cell_density(sites).cache()
     pyr = tiles.rollup_pyramid(dens).cache()

@@ -98,6 +98,28 @@ def test_partitioning_invariance(spark, unit_pages_sdf):
     pd.testing.assert_frame_equal(outs[0], outs[1])
 
 
+def test_null_host_is_its_own_run(spark):
+    """Pages with a null url (hence a null host) form their own per-host
+    run, as groupBy would group them — they are never glued onto the next
+    host of the sorted partition."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(None if i < 5 else f"https://a.example/p{i}",
+             t0 + dt.timedelta(minutes=i), b"",
+             f"[geo:43.{i:06d},-79.000000;acc=10.0]", "en")
+            for i in range(10)]
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, "
+              "lang string")
+    got = (trace_prep.geopoints(pages).select("host", "seq", "subset_id")
+           .toPandas())
+    a = got[got["host"] == "a.example"].sort_values("seq")
+    assert a["seq"].tolist() == [0, 1, 2, 3, 4]
+    assert a["subset_id"].tolist() == [0] * 5
+    null = got[got["host"].isna()].sort_values("seq")
+    assert null["seq"].tolist() == [0, 1, 2, 3, 4]
+
+
 def test_geopoints_cell_level(spark, unit_pages_sdf):
     from engine import geo
     gp = trace_prep.geopoints(unit_pages_sdf).limit(200).toPandas()
@@ -2338,6 +2360,14 @@ def test_snap_to_segments_matches_brute(spark):
     with _pt.raises(ValueError):
         spatial.snap_to_segments(pdf, long, [], "px", "py",
                                  "x1", "y1", "x2", "y2", r)
+    # ~4e9 on both axes: the cell-count product would overflow BIGINT,
+    # so only the documented extent ValueError may surface
+    huge = spark.createDataFrame(
+        [(1, 0, 0, 4_000_000_000, 4_000_000_000)],
+        "seg_id int, x1 long, y1 long, x2 long, y2 long")
+    with _pt.raises(ValueError, match="split long roads"):
+        spatial.snap_to_segments(pdf, huge, [], "px", "py",
+                                 "x1", "y1", "x2", "y2", 1)
 
 
 def test_quadrat_test_matches_brute(spark):
